@@ -4,6 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.JsonUtil
+import graft.JsonUtil.formats
+import graft.state.MetaFile
+
 /** Similarity search over an embedding column (array<float>).
   *
   * Four paths:
@@ -320,28 +324,17 @@ object Ann {
     * scatter the same vector to a different cell than its siblings. */
   def saveModel(spark: org.apache.spark.sql.SparkSession, model: IvfModel,
                 indexPath: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(indexPath, "_model.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val json = model.centroids
-      .map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
-    val out = fs.create(p, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    MetaFile.replace(spark, new org.apache.hadoop.fs.Path(indexPath,
+      "_model.json"), JsonUtil.render(model.centroids))
   }
 
   def loadModel(spark: org.apache.spark.sql.SparkSession,
                 indexPath: String): IvfModel = {
-    val p = new org.apache.hadoop.fs.Path(indexPath, "_model.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"no _model.json under $indexPath — not an " +
+    val json = MetaFile.read(spark,
+      new org.apache.hadoop.fs.Path(indexPath, "_model.json"))
+    require(json.isDefined, s"no _model.json under $indexPath — not an " +
       "incremental IVF index (build one with ivfInitIndex)")
-    val in = fs.open(p)
-    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val rows = json.stripPrefix("[").stripSuffix("]").split("\\],\\[")
-      .map(_.replaceAll("[\\[\\]]", ""))
-      .map(_.split(',').map(_.toDouble))
-    IvfModel(rows)
+    IvfModel(JsonUtil.parse(json.get).extract[Array[Array[Double]]])
   }
 
   /** Initialize an INCREMENTAL index: layout
@@ -386,9 +379,7 @@ object Ann {
   private def refuseInitOverCompacted(spark: org.apache.spark.sql.SparkSession,
                                       path: String): Unit = {
     recoverCompaction(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(foldedUpTo(fs, path).isEmpty,
+    require(foldedUpTo(spark, path).isEmpty,
       s"$path is a compacted incremental index — re-initializing in " +
         "place would mismatch the folded partitions' model; build the " +
         "new index at a fresh path and swap")
@@ -402,9 +393,7 @@ object Ann {
   private def skipFoldedReplay(spark: org.apache.spark.sql.SparkSession,
                                path: String, batchId: Long): Boolean = {
     recoverCompaction(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val skip = foldedUpTo(fs, path).exists(batchId <= _)
+    val skip = foldedUpTo(spark, path).exists(batchId <= _)
     if (skip)
       System.err.println(s"[ann] batch=$batchId at $path is at or below " +
         "the compaction fold line — replay of folded data, skipping")
@@ -510,7 +499,7 @@ object Ann {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val ids = listBatchIds(fs, path).filter(_ <= upTo)
-    val already = foldedUpTo(fs, path).getOrElse(Long.MinValue)
+    val already = foldedUpTo(spark, path).getOrElse(Long.MinValue)
     if (ids.size <= 1) return math.max(already, ids.headOption.getOrElse(already))
     val target = ids.max
     val staging = new org.apache.hadoop.fs.Path(path, s".compact-$target")
@@ -521,31 +510,24 @@ object Ann {
       .write.mode("overwrite").partitionBy("cell").parquet(staging.toString)
     // intent marker: from here the swap is committed — any crash window
     // is completed by recoverCompaction before the index is used again
-    writeSmallFile(fs, pendingPath(path),
-      s"""{"target":$target,"ids":[${ids.sorted.mkString(",")}]}""")
-    finishSwap(fs, path, target, ids)
+    MetaFile.replace(spark, pendingPath(path),
+      JsonUtil.obj("target" -> target, "ids" -> ids.sorted))
+    finishSwap(spark, path, target, ids)
     target
   }
 
   /** Complete a compaction swap that crashed between its pending marker
-    * and its final bookkeeping. Idempotent; cheap (one exists()) when no
-    * swap is pending. */
+    * and its final bookkeeping. Idempotent; cheap (one failed open) when
+    * no swap is pending. */
   def recoverCompaction(spark: org.apache.spark.sql.SparkSession,
                         path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(pendingPath(path))) return
-    val s = readSmallFile(fs, pendingPath(path))
-    val target = "\"target\"\\s*:\\s*(-?\\d+)".r.findFirstMatchIn(s)
-      .map(_.group(1).toLong)
-      .getOrElse(throw new IllegalStateException(
-        s"unparseable compaction marker under $path: $s"))
-    val ids = "\"ids\"\\s*:\\s*\\[([^\\]]*)\\]".r.findFirstMatchIn(s)
-      .map(_.group(1).split(',').map(_.trim).filter(_.nonEmpty).map(_.toLong).toSeq)
-      .getOrElse(Seq.empty)
-    System.err.println(s"[ann] completing crashed compaction at $path " +
-      s"(fold -> batch=$target)")
-    finishSwap(fs, path, target, ids)
+    MetaFile.read(spark, pendingPath(path)).map(JsonUtil.parse(_)).foreach { m =>
+      val target = (m \ "target").extract[Long]
+      System.err.println(s"[ann] completing crashed compaction at $path " +
+        s"(fold -> batch=$target)")
+      finishSwap(spark, path, target,
+        (m \ "ids").extractOpt[Seq[Long]].getOrElse(Seq.empty))
+    }
   }
 
   /** Deletes the folded batch dirs, publishes the staged fold as
@@ -553,8 +535,10 @@ object Ann {
     * step is idempotent so the sequence can resume from any crash point:
     * the staged dir exists until the rename, and its absence proves the
     * rename happened. */
-  private def finishSwap(fs: org.apache.hadoop.fs.FileSystem, path: String,
-                         target: Long, ids: Seq[Long]): Unit = {
+  private def finishSwap(spark: org.apache.spark.sql.SparkSession,
+                         path: String, target: Long, ids: Seq[Long]): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staging = new org.apache.hadoop.fs.Path(path, s".compact-$target")
     val dst = new org.apache.hadoop.fs.Path(path, s"batch=$target")
     if (fs.exists(staging)) {
@@ -564,9 +548,9 @@ object Ann {
       require(fs.rename(staging, dst),
         s"compaction swap failed: could not rename $staging to $dst")
     }
-    val prev = foldedUpTo(fs, path).getOrElse(Long.MinValue)
-    writeSmallFile(fs, compactionPath(path),
-      s"""{"folded_up_to":${math.max(prev, target)}}""")
+    val prev = foldedUpTo(spark, path).getOrElse(Long.MinValue)
+    MetaFile.replace(spark, compactionPath(path),
+      JsonUtil.obj("folded_up_to" -> math.max(prev, target)))
     fs.delete(pendingPath(path), false): Unit
   }
 
@@ -611,8 +595,8 @@ object Ann {
       batchId = foldLine)
     else ivfInitIndex(vecs, idCol, vecCol, model, staging.toString,
       batchId = foldLine)
-    writeSmallFile(fs, compactionPath(staging.toString),
-      s"""{"folded_up_to":$foldLine}""")
+    MetaFile.replace(spark, compactionPath(staging.toString),
+      JsonUtil.obj("folded_up_to" -> foldLine))
     val streamToken = new org.apache.hadoop.fs.Path(indexPath, "_stream.json")
     if (fs.exists(streamToken))
       org.apache.hadoop.fs.FileUtil.copy(fs, streamToken, fs,
@@ -659,8 +643,8 @@ object Ann {
       case other => throw new IllegalArgumentException(
         s"unknown index codec '$other' (float, sq8, pq)")
     }
-    writeSmallFile(fs, compactionPath(staging.toString),
-      s"""{"folded_up_to":$foldLine}""")
+    MetaFile.replace(spark, compactionPath(staging.toString),
+      JsonUtil.obj("folded_up_to" -> foldLine))
     val streamToken = new org.apache.hadoop.fs.Path(indexPath, "_stream.json")
     if (fs.exists(streamToken))
       org.apache.hadoop.fs.FileUtil.copy(fs, streamToken, fs,
@@ -678,13 +662,10 @@ object Ann {
 
   /** The fold line: batch ids at or below it are folded and must never
     * be (re)written. */
-  def foldedUpTo(fs: org.apache.hadoop.fs.FileSystem,
-                 path: String): Option[Long] = {
-    val p = compactionPath(path)
-    if (!fs.exists(p)) None
-    else "\"folded_up_to\"\\s*:\\s*(-?\\d+)".r
-      .findFirstMatchIn(readSmallFile(fs, p)).map(_.group(1).toLong)
-  }
+  def foldedUpTo(spark: org.apache.spark.sql.SparkSession,
+                 path: String): Option[Long] =
+    MetaFile.read(spark, compactionPath(path))
+      .map(s => (JsonUtil.parse(s) \ "folded_up_to").extract[Long])
 
   private def listBatchIds(fs: org.apache.hadoop.fs.FileSystem,
                            path: String): Seq[Long] =
@@ -694,20 +675,6 @@ object Ann {
       .collect { case n if n.startsWith("batch=") =>
         n.stripPrefix("batch=").toLong
       }.toSeq
-
-  private def writeSmallFile(fs: org.apache.hadoop.fs.FileSystem,
-                             p: org.apache.hadoop.fs.Path, s: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  private def readSmallFile(fs: org.apache.hadoop.fs.FileSystem,
-                            p: org.apache.hadoop.fs.Path): String = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-  }
 
   /** IVF top-k over an SQ8 index: probed cells partition-prune exactly
     * like [[ivfTopKIndexed]]; candidate vectors are dequantized at scan
@@ -786,29 +753,25 @@ object Ann {
     * invisible to parquet discovery): shape header + flat center list. */
   def savePqCodebooks(spark: org.apache.spark.sql.SparkSession,
                       cb: Pq.Codebooks, indexPath: String): Unit = {
-    val flat = cb.centers.flatMap(_.flatMap(_.toSeq))
-    val json = s"""{"m":${cb.m},"k":${cb.k},"dim":${cb.dim},""" +
-      s""""centers":[${flat.mkString(",")}]}"""
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    writeSmallFile(fs,
-      new org.apache.hadoop.fs.Path(indexPath, "_codebooks.json"), json)
+    MetaFile.replace(spark,
+      new org.apache.hadoop.fs.Path(indexPath, "_codebooks.json"),
+      JsonUtil.obj("m" -> cb.m, "k" -> cb.k, "dim" -> cb.dim,
+        "centers" -> cb.centers.flatMap(_.flatMap(_.toSeq))))
   }
 
   def loadPqCodebooks(spark: org.apache.spark.sql.SparkSession,
                       indexPath: String): Pq.Codebooks = {
-    val p = new org.apache.hadoop.fs.Path(indexPath, "_codebooks.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"no _codebooks.json under $indexPath — not a " +
+    val s = MetaFile.read(spark,
+      new org.apache.hadoop.fs.Path(indexPath, "_codebooks.json"))
+    require(s.isDefined, s"no _codebooks.json under $indexPath — not a " +
       "PQ incremental index (build one with ivfInitIndexPq)")
-    val s = readSmallFile(fs, p)
-    def intOf(k: String) = ("\"" + k + "\"\\s*:\\s*(\\d+)").r
-      .findFirstMatchIn(s).map(_.group(1).toInt)
-      .getOrElse(throw new IllegalStateException(s"bad _codebooks.json: $k"))
-    val (m, k, dim) = (intOf("m"), intOf("k"), intOf("dim"))
-    val flat = "\"centers\"\\s*:\\s*\\[([^\\]]*)\\]".r.findFirstMatchIn(s)
-      .map(_.group(1).split(',').map(_.trim.toFloat))
-      .getOrElse(throw new IllegalStateException("bad _codebooks.json"))
+    // exact decimals: a float read through Double can round differently
+    // (7.038531E-26 does); only the sign of a zero center is lost, which
+    // no residual distance can observe
+    val j = JsonUtil.parse(s.get, exactDecimals = true)
+    def int(f: String) = (j \ f).extract[Int]
+    val (m, k, dim) = (int("m"), int("k"), int("dim"))
+    val flat = (j \ "centers").extract[Array[Float]]
     val subDim = dim / m
     require(flat.length == m * k * subDim,
       s"_codebooks.json holds ${flat.length} floats, want ${m * k * subDim}")

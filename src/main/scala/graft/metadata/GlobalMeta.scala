@@ -3,8 +3,8 @@ package graft.metadata
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.json4s._
-import org.json4s.jackson.JsonMethods
 
+import graft.JsonUtil
 import graft.JsonUtil.jstr
 
 /** Dataset-level metadata that travels WITH the data — the reference's
@@ -87,7 +87,7 @@ object GlobalMeta {
       }.toMap
       case _ => Map.empty
     }
-    val j = JsonMethods.parse(json)
+    val j = JsonUtil.parse(json)
     val ds = j \ "dataset-level"
     val enc = ds \ TransferEncodingKey match {
       case JArray(items) => items.collect { case JString(s) => s }
@@ -208,37 +208,20 @@ object TransferEncoding {
   * merged dataset metadata lands as `.metadata.json` NEXT TO the data
   * (dot-prefixed, so every reader's listing skips it — an `_metadata`
   * name would hit Spark's parquet summary-file exemption and be read
-  * as a footer), written
-  * temp-then-rename like every commit in this engine. */
+  * as a footer), written with [[graft.state.MetaFile.replace]] like
+  * every commit in this engine (a plain `FileSystem.rename` returns FALSE on HDFS when the
+  * target exists, which would silently keep a STALE sidecar). */
 object MetaSidecar {
   import org.apache.hadoop.fs.Path
+  import graft.state.MetaFile
 
   def publish(spark: org.apache.spark.sql.SparkSession, dir: String,
               meta: GlobalMeta): Unit = {
     require(!meta.isEmpty, "refusing to publish empty metadata")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(dir).getFileSystem(conf)
-    val tmp = new Path(dir, ".metadata.json.tmp")
-    val dst = new Path(dir, ".metadata.json")
-    val out = fs.create(tmp, true)
-    try out.write(meta.canonicalJson.getBytes("UTF-8")) finally out.close()
-    // overwrite-capable rename (the StateStore.commit protocol):
-    // FileSystem.rename returns FALSE on HDFS when dst exists, which
-    // would silently keep a STALE sidecar on re-publish
-    org.apache.hadoop.fs.FileContext.getFileContext(tmp.toUri, conf)
-      .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    MetaFile.replace(spark, new Path(dir, ".metadata.json"), meta.canonicalJson)
   }
 
   def read(spark: org.apache.spark.sql.SparkSession, dir: String)
-      : Option[GlobalMeta] = {
-    val p = new Path(dir, ".metadata.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      Some(GlobalMeta.parse(txt))
-    }
-  }
+      : Option[GlobalMeta] =
+    MetaFile.read(spark, new Path(dir, ".metadata.json")).map(GlobalMeta.parse)
 }

@@ -2,8 +2,13 @@ package graft.metrics
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.collection.immutable.SortedMap
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.JsonUtil
+import graft.state.MetaFile
 
 /** Persisted tracking events — the reference's GobblinTrackingEvent
   * pipeline (events submitted through the MetricContext tree reach
@@ -22,14 +27,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final class EventStore(spark: SparkSession, dir: String) {
 
   private val buffer = new ConcurrentLinkedQueue[TrackingEvent]()
-
-  private def fs = new Path(dir)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def sanitize(id: String): String =
-    id.map(c => if (c.isLetterOrDigit || c == '-' || c == '_') c else '_')
-
-  private def js(s: String) = EventStore.js(s)
 
   /** Attach to a context (usually the root): every event submitted at
     * or below it lands in the buffer. */
@@ -53,48 +50,23 @@ final class EventStore(spark: SparkSession, dir: String) {
       buffer.iterator().asScala.toSeq
     }
     if (snapshot.isEmpty) return 0
-    fs.mkdirs(new Path(dir))
-    val p = new Path(dir, s"events-${sanitize(flushId)}.json")
-    val lines = snapshot.map { e =>
-      val md = e.metadata.toSeq.sortBy(_._1).map { case (k, v) =>
-        s"${js(k)}:${js(v)}" }.mkString("{", ",", "}")
-      s"""{"namespace":${js(e.namespace)},"name":${js(e.name)},""" +
-        s""""timestamp_ms":${e.timestampMs},"metadata":$md}""" + "\n"
-    }.mkString
-    val out = fs.create(p, false) // claims the flushId atomically
-    try out.write(lines.getBytes("UTF-8"))
-    catch { case t: Throwable =>
-      try { out.close(); fs.delete(p, true) }
-      catch { case _: java.io.IOException => }
-      throw t // buffer untouched: nothing was removed yet
-    }
-    out.close()
+    MetaFile.createOnce(spark, // claims the flushId atomically
+      new Path(dir, s"events-${MetaFile.idName(flushId)}.json"),
+      snapshot.map { e =>
+        JsonUtil.obj("namespace" -> e.namespace, "name" -> e.name,
+          "timestamp_ms" -> e.timestampMs,
+          "metadata" -> SortedMap.from(e.metadata)) + "\n"
+      }.mkString) // throws with the buffer untouched: nothing removed yet
     snapshot.foreach(_ => buffer.poll()) // remove exactly what we wrote
     snapshot.size
   }
 
   /** Full event history, fixed schema. */
-  def table: DataFrame = {
-    val p = new Path(dir)
-    if (!fs.exists(p) || fs.listStatus(p).isEmpty) {
-      import spark.implicits._
-      spark.read.schema(EventStore.schema)
-        .json(spark.createDataset(Seq.empty[String]))
-    } else spark.read.schema(EventStore.schema).json(dir)
-  }
+  def table: DataFrame = MetaFile.jsonTable(spark, dir, EventStore.schema)
 }
 
 object EventStore {
   import org.apache.spark.sql.types._
-
-  /** The ONE JSON-string escaper for every graft.metrics artifact
-    * (event files, descriptor JSON) — an escaping fix applied here
-    * cannot diverge the descriptor JSON from the event-file JSON. */
-  private[metrics] def js(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 
   val schema: StructType = StructType(Seq(
     StructField("namespace", StringType),

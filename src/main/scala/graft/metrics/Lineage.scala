@@ -2,8 +2,12 @@ package graft.metrics
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.collection.immutable.SortedMap
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.JsonUtil
 
 /** Dataset lineage — the reference's lineage-event subsystem
   * (gobblin-metrics-base/.../event/lineage/LineageInfo.java:117,146 +
@@ -27,12 +31,8 @@ final case class DatasetDescriptor(platform: String, name: String,
   /** Stable JSON (sorted metadata keys): descriptor identity is VALUE
     * identity, so the cross-branch event dedup and downstream joins see
     * one representation per descriptor. */
-  def json: String = {
-    val md = metadata.toSeq.sortBy(_._1).map { case (k, v) =>
-      s"${Lineage.js(k)}:${Lineage.js(v)}" }.mkString("{", ",", "}")
-    s"""{"platform":${Lineage.js(platform)},"name":${Lineage.js(name)},""" +
-      s""""metadata":$md}"""
-  }
+  def json: String = JsonUtil.obj("platform" -> platform, "name" -> name,
+    "metadata" -> SortedMap.from(metadata))
 }
 
 /** Per-job lineage coordinator (LineageInfo.java's State-backed
@@ -81,8 +81,6 @@ final class LineageCollector(val dataset: String) {
 object Lineage {
   val Namespace = "graft.event.lineage"
   val EventType = "LineageEvent"
-
-  private[metrics] def js(s: String): String = EventStore.js(s)
 
   /** Lineage edge table from a persisted event table ([[EventStore.table]]
     * shape): one row per (dataset, source, destination) event. */

@@ -3,6 +3,9 @@ package graft.metrics
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.JsonUtil
+import graft.state.MetaFile
+
 /** Per-run stage-metric history: records/bytes/timings per operator per
   * run, queryable as a DataFrame — the task-metric half of the
   * reference's job-history store (gobblin-metastore/.../database/
@@ -20,35 +23,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 final class MetricStore(spark: SparkSession, dir: String) {
 
-  private def fs = new Path(dir)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def sanitize(id: String): String =
-    id.map(c => if (c.isLetterOrDigit || c == '-' || c == '_') c else '_')
-
-  private def js(s: String) = "\"" + s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   /** Record one run's metric rows; throws if runId was already recorded. */
   def record(job: String, runId: String, recordedAtMs: Long,
              rows: Seq[MetricRecord]): Unit = {
-    fs.mkdirs(new Path(dir))
-    val p = new Path(dir, s"metrics-${sanitize(runId)}.json")
     // no-metric runs still create the (empty) file — the runId uniqueness
     // check must hold — but never a blank line the JSON reader would
     // surface as an all-null row
-    val lines = rows.map { r =>
-      s"""{"job":${js(job)},"run_id":${js(runId)},""" +
-        s""""context":${js(r.context)},"metric":${js(r.metric)},""" +
-        s""""kind":${js(r.kind)},"value":${r.value},""" +
-        s""""recorded_at_ms":$recordedAtMs}""" + "\n"
-    }.mkString
-    // overwrite=false: the create itself is the per-run uniqueness check
-    val out = fs.create(p, false)
-    try out.write(lines.getBytes("UTF-8")) finally out.close()
+    MetaFile.createOnce(spark,
+      new Path(dir, s"metrics-${MetaFile.idName(runId)}.json"),
+      rows.map { r =>
+        JsonUtil.obj("job" -> job, "run_id" -> runId, "context" -> r.context,
+          "metric" -> r.metric, "kind" -> r.kind, "value" -> r.value,
+          "recorded_at_ms" -> recordedAtMs) + "\n"
+      }.mkString)
   }
 
   /** One metric across runs, time-ordered — feed it to a dashboard or a
@@ -62,14 +49,7 @@ final class MetricStore(spark: SparkSession, dir: String) {
   }
 
   /** Full metric history, fixed schema (empty store still column-addressable). */
-  def table: DataFrame = {
-    val p = new Path(dir)
-    if (!fs.exists(p) || fs.listStatus(p).isEmpty) {
-      import spark.implicits._
-      spark.read.schema(MetricStore.schema)
-        .json(spark.createDataset(Seq.empty[String]))
-    } else spark.read.schema(MetricStore.schema).json(dir)
-  }
+  def table: DataFrame = MetaFile.jsonTable(spark, dir, MetricStore.schema)
 }
 
 object MetricStore {

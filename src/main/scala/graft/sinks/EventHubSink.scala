@@ -69,19 +69,8 @@ object EventHubSink {
   /** Wrap one already-serialized record as the Azure `{"Body": ...}`
     * envelope (EventhubRequest.java: the record rides as an escaped
     * JSON string, not inlined). */
-  private[sinks] def envelope(record: String): String = {
-    val sb = new StringBuilder("{\"Body\":\"")
-    record.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < 0x20 => sb.append(f"\\u$c%04x")
-      case c => sb.append(c)
-    }
-    sb.append("\"}").toString
-  }
+  private[sinks] def envelope(record: String): String =
+    graft.JsonUtil.obj("Body" -> record)
 
   /** Split enveloped records into `[...]` bodies under the byte cap
     * (the accumulator's memSize limit); a single record that alone

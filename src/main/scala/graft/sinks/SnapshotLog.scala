@@ -1,9 +1,14 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import scala.collection.immutable.SortedMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
+import graft.JsonUtil
+import graft.JsonUtil.formats
 import graft.sinks.AtomicPublisher.WriteSpec
+import graft.state.MetaFile
 
 /** Snapshot-log table commit: every commit writes NEW immutable data
   * directories plus a manifest listing the data dir of every branch
@@ -28,7 +33,7 @@ import graft.sinks.AtomicPublisher.WriteSpec
   * same distributed writes the job already does.
   *
   * Single-writer is ENFORCED, not assumed: [[stage]] takes a `LOCK` file
-  * under the log root via atomic create-if-absent (the reference
+  * under the log root via [[MetaFile.createOnce]] (the reference
   * serializes publishers with the same filesystem lock —
   * gobblin-runtime/.../locks/FsJobLock.java), holds it across
   * stage→activate, and a rival committer fails LOUDLY instead of silently
@@ -61,20 +66,14 @@ final class SnapshotLog(spark: SparkSession, root: String) {
     * object stores with conditional-put semantics), so two committers can
     * never both hold it. */
   private def acquireLock(): Unit = {
-    if (!fs.exists(rootPath)) fs.mkdirs(rootPath)
     val holder =
       java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-    try {
-      val out = fs.create(lockFile, false)
-      try out.write(s"$holder\n${java.time.Instant.now()}".getBytes("UTF-8"))
-      finally out.close()
-    } catch {
+    try MetaFile.createOnce(spark, lockFile,
+      s"$holder\n${java.time.Instant.now()}")
+    catch {
       case e: java.io.IOException =>
-        val rival = try {
-          val in = fs.open(lockFile)
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
-        } catch { case _: Exception => "<unreadable>" }
+        val rival = try MetaFile.read(spark, lockFile).fold("<unreadable>")(_.trim)
+          catch { case _: Exception => "<unreadable>" }
         throw new java.util.ConcurrentModificationException(
           s"snapshot log $root is locked by [$rival]: a rival commit is " +
             "in flight, or crashed between stage and activate — verify " +
@@ -90,15 +89,8 @@ final class SnapshotLog(spark: SparkSession, root: String) {
   def breakLock(): Unit = releaseLock()
 
   /** Id of the live snapshot, None before the first commit. */
-  def currentId(): Option[Long] = {
-    if (!fs.exists(currentPtr)) None
-    else {
-      val in = fs.open(currentPtr)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-      Some(txt.toLong)
-    }
-  }
+  def currentId(): Option[Long] =
+    MetaFile.read(spark, currentPtr).map(_.trim.toLong)
 
   def current(): Option[Snapshot] = currentId().map(snapshot)
 
@@ -106,12 +98,9 @@ final class SnapshotLog(spark: SparkSession, root: String) {
     * returned by a successful commit) are guaranteed parseable — an id
     * from a crashed commit may be absent or truncated. */
   def snapshot(id: Long): Snapshot = {
-    val p = manifestPath(id)
-    require(fs.exists(p), s"no such snapshot: $id")
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    parseManifest(id, txt)
+    val txt = MetaFile.read(spark, manifestPath(id))
+    require(txt.isDefined, s"no such snapshot: $id")
+    parseManifest(id, txt.get)
   }
 
   /** Read one branch at the live snapshot (or `asOf` for time travel). */
@@ -132,13 +121,7 @@ final class SnapshotLog(spark: SparkSession, root: String) {
     * are invisible ([[expire]] sweeps them). */
   final class Pending(val id: Long) {
     def activate(): Long = {
-      val tmp = new Path(rootPath, s".CURRENT.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(id.toString.getBytes("UTF-8")) finally out.close()
-      val fc = FileContext.getFileContext(
-        currentPtr.toUri, spark.sparkContext.hadoopConfiguration)
-      fc.rename(fc.makeQualified(tmp), fc.makeQualified(currentPtr),
-        Options.Rename.OVERWRITE)
+      MetaFile.replace(spark, currentPtr, id.toString)
       releaseLock()
       id
     }
@@ -181,13 +164,10 @@ final class SnapshotLog(spark: SparkSession, root: String) {
       val carried =
         parent.map(_.branches).getOrElse(Map.empty) -- branches.keys -- drop
       val snap = Snapshot(id, parent.map(_.id), carried ++ written)
-      val mp = manifestPath(id)
-      if (!fs.exists(mp.getParent)) fs.mkdirs(mp.getParent)
-      // overwrite=false: under the lock no rival can race this id, so an
+      // create-once: under the lock no rival can race this id, so an
       // existing manifest means something is deeply wrong — fail loudly
       // rather than silently replace it
-      val out = fs.create(mp, false)
-      try out.write(renderManifest(snap).getBytes("UTF-8")) finally out.close()
+      MetaFile.createOnce(spark, manifestPath(id), renderManifest(snap))
       new Pending(id)
     } catch { case e: Throwable => releaseLock(); throw e }
   }
@@ -247,12 +227,8 @@ final class SnapshotLog(spark: SparkSession, root: String) {
         require(fs.exists(new Path(rootPath, b.path)),
           s"replicated data dir missing for branch $name: ${b.path}")
       }
-      val reparented = snap.copy(parent = cur.map(_.id))
-      val mp = manifestPath(snap.id)
-      if (!fs.exists(mp.getParent)) fs.mkdirs(mp.getParent)
-      val out = fs.create(mp, true)
-      try out.write(renderManifest(reparented).getBytes("UTF-8"))
-      finally out.close()
+      MetaFile.replace(spark, manifestPath(snap.id),
+        renderManifest(snap.copy(parent = cur.map(_.id))))
       new Pending(snap.id).activate()
     } catch { case e: Throwable => releaseLock(); throw e }
   }
@@ -277,12 +253,8 @@ final class SnapshotLog(spark: SparkSession, root: String) {
           s"cannot roll back to $asOf: branch $name data expired (${b.path})")
       }
       val id = nextId(Some(cur.id))
-      val rolled = target.copy(id = id, parent = Some(cur.id))
-      val mp = manifestPath(id)
-      if (!fs.exists(mp.getParent)) fs.mkdirs(mp.getParent)
-      val out = fs.create(mp, true)
-      try out.write(renderManifest(rolled).getBytes("UTF-8"))
-      finally out.close()
+      MetaFile.replace(spark, manifestPath(id),
+        renderManifest(target.copy(id = id, parent = Some(cur.id))))
       new Pending(id).activate()
     } catch { case e: Throwable => releaseLock(); throw e }
   }
@@ -353,49 +325,23 @@ object SnapshotLog {
 
   private val ManifestName = "snap-(\\d+)\\.json".r
 
-  private def js(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
-
-  private[sinks] def renderManifest(s: Snapshot): String = {
-    val header =
-      s"""{"snapshot":${s.id},"parent":${s.parent.getOrElse(-1L)}}"""
-    val lines = s.branches.toSeq.sortBy(_._1).map { case (name, b) =>
-      val opts = b.readOptions.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${js(k)}:${js(v)}" }.mkString("{", ",", "}")
-      s"""{"branch":${js(name)},"path":${js(b.path)},"format":${js(b.format)},"options":$opts}"""
-    }
-    (header +: lines).mkString("\n")
-  }
-
-  private val StrField = "\"(branch|path|format)\":\"((?:[^\"\\\\]|\\\\.)*)\"".r
-  private val OptPair = "\"((?:[^\"\\\\]|\\\\.)*)\":\"((?:[^\"\\\\]|\\\\.)*)\"".r
+  private[sinks] def renderManifest(s: Snapshot): String =
+    (JsonUtil.obj("snapshot" -> s.id, "parent" -> s.parent.getOrElse(-1L)) +:
+      s.branches.toSeq.sortBy(_._1).map { case (name, b) =>
+        JsonUtil.obj("branch" -> name, "path" -> b.path, "format" -> b.format,
+          "options" -> SortedMap.from(b.readOptions))
+      }).mkString("\n")
 
   private[sinks] def parseManifest(id: Long, txt: String): Snapshot = {
-    val lines = txt.linesIterator.filter(_.nonEmpty).toSeq
+    val lines = JsonUtil.parseLines(txt)
     require(lines.nonEmpty, s"empty manifest for snapshot $id")
-    val header = lines.head
-    val headId = "\"snapshot\":(\\d+)".r.findFirstMatchIn(header)
-      .map(_.group(1).toLong)
-      .getOrElse(throw new IllegalArgumentException(s"bad manifest header: $header"))
+    val headId = (lines.head \ "snapshot").extract[Long]
     require(headId == id, s"manifest id $headId != requested $id")
-    val parent = "\"parent\":(-?\\d+)".r.findFirstMatchIn(header)
-      .map(_.group(1).toLong).filter(_ >= 0)
-    val branches = lines.tail.map { line =>
-      val fields = StrField.findAllMatchIn(line)
-        .map(m => m.group(1) -> graft.state.StateStore.unescape(m.group(2))).toMap
-      val name = fields.getOrElse("branch",
-        throw new IllegalArgumentException(s"bad manifest line: $line"))
-      // options live in the trailing {...}; strip the known fields first so
-      // their key:value pairs aren't re-matched as options
-      val optsTxt = line.substring(line.indexOf("\"options\":") + "\"options\":".length)
-      val opts = OptPair.findAllMatchIn(optsTxt).map(m =>
-        graft.state.StateStore.unescape(m.group(1)) ->
-          graft.state.StateStore.unescape(m.group(2))).toMap
-      name -> BranchRef(fields("path"), fields.getOrElse("format", "parquet"), opts)
-    }.toMap
-    Snapshot(id, parent, branches)
+    val parent = (lines.head \ "parent").extractOpt[Long].filter(_ >= 0)
+    Snapshot(id, parent, lines.tail.map { b =>
+      (b \ "branch").extract[String] -> BranchRef((b \ "path").extract[String],
+        (b \ "format").extractOpt[String].getOrElse("parquet"),
+        (b \ "options").extractOpt[Map[String, String]].getOrElse(Map.empty))
+    }.toMap)
   }
 }

@@ -149,9 +149,7 @@ final case class HttpWebmasterClient(baseUrl: String,
 
   override def analytics(pages: Seq[String])
       : Seq[(String, Long, Long, Double)] = {
-    val payload = pages.map(p =>
-      "\"" + p.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
-      .mkString("[", ",", "]")
+    val payload = graft.JsonUtil.render(pages)
     val body = graft.sinks.HttpSink.send(client, cfg(s"$baseUrl/analytics"),
       "POST", Some(payload))
     org.json4s.jackson.JsonMethods.parse(body) match {

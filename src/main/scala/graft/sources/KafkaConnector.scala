@@ -37,7 +37,7 @@ object KafkaConnector {
       val parts = m.toSeq.sortBy(_._1._2)
         .map { case ((_, p), off) => s""""$p":$off""" }
         .mkString("{", ",", "}")
-      s""""${topic.replace("\\", "\\\\").replace("\"", "\\\"")}":$parts"""
+      s"${graft.JsonUtil.jstr(topic)}:$parts"
     }.mkString("{", ",", "}")
 
   /** Where each planned range starts reading. */

@@ -1,7 +1,11 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.JsonUtil
+import graft.JsonUtil.formats
+import graft.state.MetaFile
 
 /** Incremental file-manifest source: list the files under a root, diff
   * against the manifest committed by the previous run, and extract ONLY
@@ -103,50 +107,19 @@ final class ManifestStore(spark: SparkSession, dir: String) {
   private def file(dataset: String) =
     new Path(s"$dir/manifest-${dataset.replaceAll("[^A-Za-z0-9._-]", "_")}.json")
 
-  private def fs = new Path(dir)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** path -> (length, modTime) of the last committed snapshot. */
-  def read(dataset: String): Map[String, (Long, Long)] = {
-    val p = file(dataset)
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                finally in.close()
-      txt.linesIterator.filter(_.nonEmpty).map { line =>
-        val path = """"path":"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(line)
-          .map(m => graft.state.StateStore.unescape(m.group(1)))
-          .getOrElse(throw new IllegalArgumentException(s"bad manifest line: $line"))
-        val len = """"length":(\d+)""".r.findFirstMatchIn(line)
-          .map(_.group(1).toLong)
-          .getOrElse(throw new IllegalArgumentException(s"bad manifest line: $line"))
-        val mod = """"mod_time":(\d+)""".r.findFirstMatchIn(line)
-          .map(_.group(1).toLong).getOrElse(0L)
-        path -> ((len, mod))
+  def read(dataset: String): Map[String, (Long, Long)] =
+    MetaFile.read(spark, file(dataset)).fold(Map.empty[String, (Long, Long)]) {
+      txt => JsonUtil.parseLines(txt).map { j =>
+        (j \ "path").extract[String] -> (((j \ "length").extract[Long],
+          (j \ "mod_time").extractOpt[Long].getOrElse(0L)))
       }.toMap
     }
-  }
 
-  /** Replace the snapshot atomically (overwrite rename — never a moment
-    * without a readable manifest). */
-  def commit(dataset: String, files: Seq[FileMeta]): Unit = {
-    def js(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
-    val txt = files.map(f =>
-      s"""{"path":${js(f.path)},"length":${f.length},"mod_time":${f.modTime}}""")
-      .mkString("\n")
-    val dst = file(dataset)
-    val tmp = new Path(dst.getParent, "." + dst.getName + ".tmp")
-    if (!fs.exists(dst.getParent)) fs.mkdirs(dst.getParent)
-    val out = fs.create(tmp, true)
-    try out.write(txt.getBytes("UTF-8")) finally out.close()
-    val fc = FileContext.getFileContext(dst.toUri,
-      spark.sparkContext.hadoopConfiguration)
-    fc.rename(fc.makeQualified(tmp), fc.makeQualified(dst),
-      Options.Rename.OVERWRITE)
-  }
+  /** Replace the snapshot atomically ([[MetaFile.replace]] — never a
+    * moment without a readable manifest). */
+  def commit(dataset: String, files: Seq[FileMeta]): Unit =
+    MetaFile.replace(spark, file(dataset), files.map(f => JsonUtil.obj(
+      "path" -> f.path, "length" -> f.length, "mod_time" -> f.modTime))
+      .mkString("\n"))
 }

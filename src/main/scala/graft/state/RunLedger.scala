@@ -3,6 +3,7 @@ package graft.state
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.JsonUtil
 import graft.pipeline.PipelineRunner.JobResult
 
 /** Job-execution history: one immutable JSON record per completed run,
@@ -18,12 +19,6 @@ import graft.pipeline.PipelineRunner.JobResult
   */
 final class RunLedger(spark: SparkSession, dir: String) {
 
-  private def fs = new Path(dir)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def sanitize(id: String): String =
-    id.map(c => if (c.isLetterOrDigit || c == '-' || c == '_') c else '_')
-
   /** Record one run outcome; throws if this runId was already recorded. */
   def record(job: String, runId: String, status: String,
              startedAtMs: Long, finishedAtMs: Long,
@@ -31,25 +26,12 @@ final class RunLedger(spark: SparkSession, dir: String) {
              branchCounts: Map[String, Long] = Map.empty,
              committedWatermark: Option[String] = None,
              detail: String = ""): Unit = {
-    fs.mkdirs(new Path(dir))
-    val p = new Path(dir, s"run-${sanitize(runId)}.json")
-    def js(s: String) = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val branches = branchCounts.map { case (b, n) =>
-      s"${js(b)}:$n" }.mkString("{", ",", "}")
-    val line =
-      s"""{"run_id":${js(runId)},"job":${js(job)},""" +
-        s""""status":${js(status)},"started_at_ms":$startedAtMs,""" +
-        s""""finished_at_ms":$finishedAtMs,"extracted":$extracted,""" +
-        s""""rejected":$rejected,"branch_counts":$branches,""" +
-        s""""committed_watermark":${committedWatermark.fold("null")(js)},""" +
-        s""""detail":${js(detail)}}"""
-    // overwrite=false: the create itself is the uniqueness check
-    val out = fs.create(p, false)
-    try out.write(line.getBytes("UTF-8")) finally out.close()
+    MetaFile.createOnce(spark, new Path(dir, s"run-${MetaFile.idName(runId)}.json"),
+      JsonUtil.obj("run_id" -> runId, "job" -> job, "status" -> status,
+        "started_at_ms" -> startedAtMs, "finished_at_ms" -> finishedAtMs,
+        "extracted" -> extracted, "rejected" -> rejected,
+        "branch_counts" -> branchCounts,
+        "committed_watermark" -> committedWatermark, "detail" -> detail))
   }
 
   /** Record a completed run from its JobResult. A run that published
@@ -113,14 +95,7 @@ final class RunLedger(spark: SparkSession, dir: String) {
     * an empty ledger is still column-addressable — monitoring queries
     * like `history.filter("status = 'FAILED'")` resolve before the first
     * run is ever recorded. */
-  def history: DataFrame = {
-    val p = new Path(dir)
-    if (!fs.exists(p) || fs.listStatus(p).isEmpty) {
-      import spark.implicits._
-      spark.read.schema(RunLedger.schema)
-        .json(spark.createDataset(Seq.empty[String]))
-    } else spark.read.schema(RunLedger.schema).json(dir)
-  }
+  def history: DataFrame = MetaFile.jsonTable(spark, dir, RunLedger.schema)
 }
 
 object RunLedger {

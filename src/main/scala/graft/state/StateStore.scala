@@ -1,7 +1,9 @@
 package graft.state
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.JsonUtil
+import graft.JsonUtil.formats
 
 /** Watermark / run-state store for incremental processing.
   *
@@ -18,93 +20,33 @@ import org.apache.spark.sql.functions._
   * a 100 TB job.
   */
 final class StateStore(spark: SparkSession, dir: String) {
-  import StateStore._
 
-  private val path = s"$dir/watermarks.json"
+  private val path = new org.apache.hadoop.fs.Path(dir, "watermarks.json")
 
-  private def fs = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-  }
-
-  def read(): Map[(String, String), String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      txt.linesIterator.filter(_.nonEmpty).map(parseLine).toMap
+  def read(): Map[(String, String), String] =
+    MetaFile.read(spark, path).fold(Map.empty[(String, String), String]) {
+      txt => JsonUtil.parseLines(txt).map { j =>
+        ((j \ "dataset").extract[String], (j \ "partition").extract[String]) ->
+          (j \ "high_watermark").extract[String]
+      }.toMap
     }
-  }
 
   def highWatermark(dataset: String, partition: String = ""): Option[String] =
     read().get((dataset, partition))
 
-  /** Upsert watermarks atomically: write temp, then a single
-    * overwrite-capable rename — there is never a moment without a readable
-    * state file (a delete-then-rename would, on a crash between the two,
-    * fall back to watermarkDefault next run and re-extract everything;
-    * the reference's FsStateStore keeps prior state recoverable). */
-  def commit(entries: Map[(String, String), String], runId: String): Unit = {
-    val merged = read() ++ entries
-    val txt = merged.map { case ((d, pt), wm) =>
-      s"""{"dataset":${js(d)},"partition":${js(pt)},"high_watermark":${js(wm)},"run_id":${js(runId)}}"""
-    }.mkString("\n")
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/.watermarks.json.tmp")
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val out = fs.create(tmp, true)
-    try out.write(txt.getBytes("UTF-8")) finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      dst.toUri, spark.sparkContext.hadoopConfiguration)
-    fc.rename(fc.makeQualified(tmp), fc.makeQualified(dst),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+  /** Upsert watermarks atomically ([[MetaFile.replace]]): a crash never
+    * leaves the store without a readable state file, which would fall
+    * back to watermarkDefault next run and re-extract everything (the
+    * reference's FsStateStore keeps prior state recoverable). */
+  def commit(entries: Map[(String, String), String], runId: String): Unit =
+    MetaFile.replace(spark, path, (read() ++ entries).map { case ((d, pt), wm) =>
+      JsonUtil.obj("dataset" -> d, "partition" -> pt, "high_watermark" -> wm,
+        "run_id" -> runId)
+    }.mkString("\n"))
 
   def asDataFrame: DataFrame = {
     import spark.implicits._
     read().toSeq.map { case ((d, p), w) => (d, p, w) }
       .toDF("dataset", "partition", "high_watermark")
-  }
-}
-
-object StateStore {
-  private def js(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
-
-  /** Inverse of [[js]]'s escaping (the full set: quote, backslash,
-    * newline, \\uXXXX) — values must round-trip or re-runs misread their
-    * own committed state. */
-  private[graft] def unescape(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"'  => sb += '"'; i += 2
-          case '\\' => sb += '\\'; i += 2
-          case 'n'  => sb += '\n'; i += 2
-          case 'u' if i + 6 <= s.length =>
-            sb += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar
-            i += 6
-          case other => sb += other; i += 2
-        }
-      } else { sb += c; i += 1 }
-    }
-    sb.toString
-  }
-
-  // minimal JSON-line parser for the fixed shape written by commit()
-  private[state] def parseLine(line: String): ((String, String), String) = {
-    def field(name: String): String = {
-      val m = ("\"" + name + "\":\"((?:[^\"\\\\]|\\\\.)*)\"").r
-      m.findFirstMatchIn(line)
-        .map(mm => unescape(mm.group(1)))
-        .getOrElse(throw new IllegalArgumentException(s"bad state line: $line"))
-    }
-    ((field("dataset"), field("partition")), field("high_watermark"))
   }
 }

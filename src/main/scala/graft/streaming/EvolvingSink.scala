@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.operators.SchemaEvolution
+import graft.state.MetaFile
 
 /** Streaming sink whose output SCHEMA may evolve mid-stream — the
   * Spark-native form of the reference's in-flight schema-change path
@@ -16,7 +17,7 @@ import graft.operators.SchemaEvolution
   * Layout under `outDir`:
   *   _schema_log          one line per schema GENERATION:
   *                        `<gen>\t<sinceEpoch>\t<schema json>`,
-  *                        rewritten whole via tmp+rename (atomic, small)
+  *                        rewritten whole via MetaFile.replace
   *   gen=K/epoch-E/part-….parquet  epoch E's rows in gen K's schema
   *
   * Files keep their WRITER schema forever (no rewrite on evolution —
@@ -40,39 +41,19 @@ object EvolvingSink {
   private def logPath(outDir: String) = new Path(outDir, "_schema_log")
 
   /** The generation log (empty when the sink has never committed). */
-  def schemaLog(spark: SparkSession, outDir: String): Seq[Generation] = {
-    val p = logPath(outDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      text.split('\n').toSeq.filter(_.nonEmpty).map { line =>
+  def schemaLog(spark: SparkSession, outDir: String): Seq[Generation] =
+    MetaFile.read(spark, logPath(outDir)).toSeq
+      .flatMap(_.linesIterator.filter(_.nonEmpty)).map { line =>
         val Array(g, e, json) = line.split("\t", 3)
         Generation(g.toInt, e.toLong,
           DataType.fromJson(json).asInstanceOf[StructType])
       }
-    }
-  }
 
+  // one atomic replace: a lost log would orphan every committed generation
   private def writeLog(spark: SparkSession, outDir: String,
-                       gens: Seq[Generation]): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = logPath(outDir)
-    val fs = p.getFileSystem(conf)
-    val tmp = new Path(outDir, s"._schema_log.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(gens.map(g =>
-      s"${g.gen}\t${g.sinceEpoch}\t${g.schema.json}").mkString("\n")
-      .getBytes("UTF-8"))
-    finally out.close()
-    // overwrite-capable rename: one atomic replace, no delete-then-rename
-    // crash window (a lost log would orphan every committed generation)
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, conf)
-    fc.rename(fc.makeQualified(tmp), fc.makeQualified(p),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+                       gens: Seq[Generation]): Unit =
+    MetaFile.replace(spark, logPath(outDir), gens.map(g =>
+      s"${g.gen}\t${g.sinceEpoch}\t${g.schema.json}").mkString("\n"))
 
   /** One micro-batch: resolve its generation, align, write its slice.
     * Exposed for tests; the streaming query calls it per epoch. */

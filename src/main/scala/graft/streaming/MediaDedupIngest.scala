@@ -7,7 +7,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
+import graft.JsonUtil
+import graft.JsonUtil.formats
 import graft.multimodal.{AudioDedup, ImageDedup, MediaPipeline, VideoDedup}
+import graft.state.MetaFile
 
 /** Streaming perceptual-media ADMISSION: every micro-batch of media
   * records dedups against everything COMMITTED by earlier batches
@@ -377,28 +380,26 @@ object MediaDedupIngest {
                           partsSpec: String = "none"): Unit = {
     val fmt = formatVersion(modality)
     readFormat(spark, storePath) match {
-      case Some((boundMod, boundFmt)) =>
-        require(boundMod == modality,
-          s"store $storePath holds '$boundMod' fingerprints but this " +
+      case Some(bound) =>
+        require(bound.modality == modality,
+          s"store $storePath holds '${bound.modality}' fingerprints but this " +
             s"stream admits '$modality' — the hash spaces are unrelated; " +
             "use a separate store per modality")
-        require(boundFmt == fmt,
-          s"store $storePath holds $boundMod fingerprints in format " +
-            s"v$boundFmt but this build produces v$fmt — committed " +
+        require(bound.format == fmt,
+          s"store $storePath holds ${bound.modality} fingerprints in format " +
+            s"v${bound.format} but this build produces v$fmt — committed " +
             "hashes would silently stop matching and previously-deduped " +
             "content would be re-admitted; rebuild the store before " +
             "admitting")
-        val boundParts = readPartsSpec(spark, storePath)
-        require(boundParts == partsSpec,
-          s"store $storePath was built with part spec '$boundParts' but " +
+        require(bound.parts == partsSpec,
+          s"store $storePath was built with part spec '${bound.parts}' but " +
             s"this stream runs '$partsSpec' — committed part values " +
             "would silently never match (or trimmed/cropped re-uploads " +
             "of earlier content would silently admit); rebuild the " +
             "store or match the spec")
-        val boundLayout = readLayout(spark, storePath)
-        require(boundLayout == Layout,
+        require(bound.layout == Layout,
           s"store $storePath lays out committed hashes as " +
-            s"'$boundLayout' but this build writes and prunes " +
+            s"'${bound.layout}' but this build writes and prunes " +
             s"'$Layout' bucket dirs — appending bucketed batch dirs to " +
             "a flat store breaks partition discovery for every later " +
             "read; rebuild the store (re-hash its survivors) first")
@@ -414,69 +415,33 @@ object MediaDedupIngest {
     }
   }
 
-  private[streaming] def readFormat(spark: SparkSession,
-                                    storePath: String): Option[(String, Int)] = {
-    val p = formatTokenPath(storePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val rx = "\"modality\"\\s*:\\s*\"([^\"]+)\"[\\s\\S]*\"format\"\\s*:\\s*(\\d+)".r
-      rx.findFirstMatchIn(s).map(m => (m.group(1), m.group(2).toInt))
-    }
-  }
-
   /** The hash/parts store layout this build writes: `batch=<id>/
     * hb=<bucket>` hash-prefix partitioning ([[NumBuckets]] buckets). */
   private[streaming] val Layout = s"hb$NumBuckets"
 
-  /** The recorded store layout; tokens predating bucketed stores (no
-    * `layout` field) read as "flat" — unpartitioned batch dirs. */
-  private[streaming] def readLayout(spark: SparkSession,
-                                    storePath: String): String = {
-    val p = formatTokenPath(storePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Layout
-    else {
-      val in = fs.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val rx = "\"layout\"\\s*:\\s*\"([^\"]+)\"".r
-      rx.findFirstMatchIn(s).map(_.group(1)).getOrElse("flat")
-    }
-  }
+  /** A store's recorded `_format.json`. Tokens predating part-hash
+    * admission carry no `parts` (read as "none" — those stores committed
+    * no parts); tokens predating bucketed stores carry no `layout` (read
+    * as "flat" — unpartitioned batch dirs). */
+  private[graft] final case class StoreFormat(modality: String, format: Int,
+                                              parts: String, layout: String)
 
-  /** The recorded part spec; tokens predating part-hash admission (no
-    * `parts` field) read as "none" — those stores committed no parts. */
-  private[streaming] def readPartsSpec(spark: SparkSession,
-                                       storePath: String): String = {
-    val p = formatTokenPath(storePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) "none"
-    else {
-      val in = fs.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val rx = "\"parts\"\\s*:\\s*\"([^\"]+)\"".r
-      rx.findFirstMatchIn(s).map(_.group(1)).getOrElse("none")
+  private[graft] def readFormat(spark: SparkSession,
+                                storePath: String): Option[StoreFormat] =
+    MetaFile.read(spark, formatTokenPath(storePath)).map { s =>
+      val j = JsonUtil.parse(s)
+      StoreFormat((j \ "modality").extract[String], (j \ "format").extract[Int],
+        (j \ "parts").extractOpt[String].getOrElse("none"),
+        (j \ "layout").extractOpt[String].getOrElse("flat"))
     }
-  }
 
   private[streaming] def writeFormat(spark: SparkSession, storePath: String,
                                      modality: String, fmt: Int,
                                      partsSpec: String = "none",
-                                     layout: String = Layout): Unit = {
-    val p = formatTokenPath(storePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val json =
-      s"""{"modality":"$modality","format":$fmt,"parts":"$partsSpec",""" +
-        s""""layout":"$layout"}"""
-    val out = fs.create(p, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+                                     layout: String = Layout): Unit =
+    MetaFile.replace(spark, formatTokenPath(storePath), JsonUtil.obj(
+      "modality" -> modality, "format" -> fmt, "parts" -> partsSpec,
+      "layout" -> layout))
 
   /** Load the committed-side Bloom prefilter for `batchId` from
     * persisted sketches — O(batches-since-compaction) small-file reads

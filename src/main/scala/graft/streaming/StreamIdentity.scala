@@ -3,6 +3,10 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
+import graft.JsonUtil
+import graft.JsonUtil.formats
+import graft.state.MetaFile
+
 /** Checkpoint-lineage binding for stores fed by micro-batch ids. Any
   * store that publishes `batch=<id>` partitions by overwrite gets its
   * exactly-once-by-layout guarantee from ONE assumption: batch ids come
@@ -47,42 +51,19 @@ object StreamIdentity {
   /** The query id Spark persisted in the checkpoint's `metadata` file —
     * minted once per checkpoint creation, stable across restarts. */
   def checkpointQueryId(spark: SparkSession,
-                        checkpointDir: String): Option[String] = {
-    val p = new Path(checkpointDir, "metadata")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      "\"id\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(s).map(_.group(1))
-    }
-  }
+                        checkpointDir: String): Option[String] =
+    MetaFile.read(spark, new Path(checkpointDir, "metadata"))
+      .flatMap(s => (JsonUtil.parse(s) \ "id").extractOpt[String])
 
   def read(spark: SparkSession,
-           storePath: String): Option[(String, String)] = {
-    val p = tokenPath(storePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val rx = "\"checkpoint\"\\s*:\\s*\"([^\"]+)\"[\\s\\S]*\"query_id\"\\s*:\\s*\"([^\"]+)\"".r
-      rx.findFirstMatchIn(s).map(m => (m.group(1), m.group(2)))
+           storePath: String): Option[(String, String)] =
+    MetaFile.read(spark, tokenPath(storePath)).map { s =>
+      val j = JsonUtil.parse(s)
+      ((j \ "checkpoint").extract[String], (j \ "query_id").extract[String])
     }
-  }
 
   def write(spark: SparkSession, storePath: String,
-            checkpointDir: String, queryId: String): Unit = {
-    val p = tokenPath(storePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val json = s"""{"checkpoint":${q(checkpointDir)},"query_id":${q(queryId)}}"""
-    val out = fs.create(p, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  private def q(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+            checkpointDir: String, queryId: String): Unit =
+    MetaFile.replace(spark, tokenPath(storePath),
+      JsonUtil.obj("checkpoint" -> checkpointDir, "query_id" -> queryId))
 }

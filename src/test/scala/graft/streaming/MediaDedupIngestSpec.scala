@@ -236,7 +236,7 @@ class MediaDedupIngestSpec extends SparkSpec {
     MediaDedupIngest.start(Streams.fileReplay(spark, s"$in/*", schema),
       store, ckpt, modality = "audio").awaitTermination()
     // the first start stamped the store with this build's format
-    assert(MediaDedupIngest.readFormat(spark, store)
+    assert(MediaDedupIngest.readFormat(spark, store).map(f => (f.modality, f.format))
       .contains(("audio", MediaDedupIngest.formatVersion("audio"))))
     // same version resumes fine
     MediaDedupIngest.start(Streams.fileReplay(spark, s"$in/*", schema),
@@ -350,7 +350,7 @@ class MediaDedupIngestSpec extends SparkSpec {
     val b0 = new File(s"$store/hashes/batch=0")
     val hbDirs = b0.listFiles().filter(_.isDirectory).map(_.getName).toSeq
     assert(hbDirs.nonEmpty && hbDirs.forall(_.startsWith("hb=")), hbDirs)
-    assert(MediaDedupIngest.readLayout(spark, store) == "hb64")
+    assert(MediaDedupIngest.readFormat(spark, store).map(_.layout).contains("hb64"))
     // the FS-level pruning guarantee: replay batch 1's probe by hand —
     // the bucket-filtered committed view must SCAN only matching-bucket
     // files (executed-plan numFiles), never the whole committed store
